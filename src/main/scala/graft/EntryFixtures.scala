@@ -512,12 +512,12 @@ private[graft] object EntryFixtures {
     } finally b.unpersist()
   }
 
-  /** One drained JointKpis run per (session, sfDir) — st_joint_category
-    * and st_joint_daily read their table from the SAME committed root
-    * instead of each paying a full stage + AvailableNow drain of the
-    * identical one-query-two-tables pipeline (code-review r6). The memo
-    * is the keyed-cache pattern of Similarity's centroid cache; entries
-    * drop with Dedup.clearCaches.
+  /** One drained JointKpis run per (session, sfDir) — st_joint_category,
+    * st_joint_daily and st_daily_kpis read their table from the SAME
+    * committed root instead of each paying a full stage + AvailableNow
+    * drain of the identical one-query-two-tables pipeline (code-review
+    * r6). The memo is the keyed-cache pattern of Similarity's centroid
+    * cache; entries drop with Dedup.clearCaches.
     */
   private[graft] val jointKpiRoots =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

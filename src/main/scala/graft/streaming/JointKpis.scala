@@ -56,8 +56,8 @@ case class JointKpiRow(table: String, order_date: java.sql.Date,
 /** Joint commit of BOTH reference KPI tables (VERDICT r05 #4): the
   * reference's transform task writes `order_kpis_category` and
   * `order_kpis_daily` in one process with one retry envelope
-  * (transform.py:329-404, stepfunction.json:92-154); the suite's two
-  * independent streaming writers could crash BETWEEN their commits and
+  * (transform.py:329-404, stepfunction.json:92-154); two independent
+  * per-table streaming writers could crash BETWEEN their commits and
   * leave the tables at different batch versions. Here one
   * `flatMapGroupsWithState` keyed by order_date carries the state of both
   * aggregations (the category counters are a per-day map — categories are
@@ -163,8 +163,7 @@ object JointKpis {
     * pointer. A replayed batch id is skipped against the committed
     * version — the whole pair is exactly-once as a unit.
     */
-  private[streaming] def jointSink(root: String, staleMs: Option[Long] = None,
-                                   retainVersions: Int = 2)
+  private[streaming] def jointSink(root: String, retainVersions: Int = 2)
                                   (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val rootPath = new Path(root)
@@ -176,7 +175,7 @@ object JointKpis {
     // (fragile under RocksDB re-execution; verifyAndAppend's recipe)
     batch.persist()
     try StreamingPipeline.withWriterLock(fs, rootPath,
-      StreamingPipeline.resolveStaleMs(spark, staleMs)) {
+      StreamingPipeline.resolveStaleMs(spark)) {
       val cur = SnapshotStore.currentVersion(fs, rootPath)
       if (!cur.exists(_ >= batchId)) {
         val cat = batch.filter(col("table") === "category")
@@ -208,7 +207,6 @@ object JointKpis {
     * The right default when the committed tables outgrow aggregate grain.
     */
   private[streaming] def jointSinkManifested(root: String,
-                                             staleMs: Option[Long] = None,
                                              maxManifestVersions: Int = 16,
                                              retentionMs: Long = 10 * 60 * 1000L)
                                             (batch: DataFrame, batchId: Long): Unit = {
@@ -217,7 +215,7 @@ object JointKpis {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     batch.persist()
     try StreamingPipeline.withWriterLock(fs, rootPath,
-      StreamingPipeline.resolveStaleMs(spark, staleMs)) {
+      StreamingPipeline.resolveStaleMs(spark)) {
       if (!SnapshotStore.currentVersion(fs, rootPath).exists(_ >= batchId)) {
         val cat = batch.filter(col("table") === "category")
           .select("category", "order_date", "daily_revenue", "avg_order_value",

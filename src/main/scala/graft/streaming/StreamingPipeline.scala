@@ -2,11 +2,8 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.Row
 import graft.operators.Upsert
-import graft.transform.Kpis
 
 /** ST1/ST4/ST5/ST7 — the event-driven pipeline as Structured Streaming.
   *
@@ -16,8 +13,9 @@ import graft.transform.Kpis
   * transform.py:329-404). Structured Streaming collapses that to: a file
   * source (new file in directory = new data, ST1), micro-batch triggers
   * (ST4), a cumulative streaming aggregation in update mode whose changed
-  * rows are upserted per batch (ST5), and an idempotent keyed sink + the
-  * checkpoint's exactly-once file tracking (ST2/ST7).
+  * rows are upserted per batch (ST5 — [[JointKpis]] maintains both KPI
+  * tables this way), and an idempotent keyed sink + the checkpoint's
+  * exactly-once file tracking (ST2/ST7).
   */
 object StreamingPipeline {
 
@@ -54,17 +52,9 @@ object StreamingPipeline {
     stream.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
-  /** ST5/ST7 per-batch sink: keyed upsert of the micro-batch into a parquet
-    * table at `targetDir/data`, with a staging-write + rename swap so readers
-    * never see a half-written table. Idempotent: re-running a batch after a
-    * failure rewrites the same cumulative values for the same keys — the
-    * exactly-once recipe (replayable source + idempotent keyed sink, ST7;
-    * the reference relies on DynamoDB put idempotency the same way,
-    * transform.py:379-387).
-    */
-  /** Crash recovery for the rename swaps below: if a previous run died
-    * between "rename current away" and "rename staged in", the table only
-    * survives in a `_bak_*` directory — restore the newest one before
+  /** Crash recovery for [[upsertBatch]]'s rename swap: if a previous run
+    * died between "rename current away" and "rename staged in", the table
+    * only survives in a `_bak_*` directory — restore the newest one before
     * reading. Makes the swap windows safe: every crash point leaves either
     * the old table, the backup, or the new table recoverable.
     */
@@ -72,42 +62,12 @@ object StreamingPipeline {
                             root: Path, cur: Path): Unit =
     if (!fs.exists(cur) && fs.exists(root)) {
       val baks = fs.listStatus(root)
-        // full-table backups only: partition-level backups carry the
-        // partition dir name (`_bak_<id>_<col>=<value>`) and must never be
-        // promoted to be the whole table (ADVICE r03)
-        .filter { s =>
-          val n = s.getPath.getName
-          n.startsWith("_bak_") && !n.contains("=")
-        }
+        .filter(_.getPath.getName.startsWith("_bak_"))
         .sortBy(_.getModificationTime)
-      baks.lastOption.foreach(b => fs.rename(b.getPath, cur))
-    }
-
-  /** Crash recovery for [[upsertPartitionedBatch]]'s per-partition swaps
-    * (ADVICE r03): a crash between "rename dest away" and "rename staged in"
-    * leaves that partition only in `_bak_<batchId>_<col>=<value>`. On entry,
-    * rename each such backup back under data/ when its destination is
-    * missing (the swap never completed — restore, so the replayed merge
-    * sees the old rows); when the destination exists the swap DID complete
-    * and only the backup cleanup was lost — drop it.
-    */
-  private def recoverPartitionBackups(fs: org.apache.hadoop.fs.FileSystem,
-                                      root: Path, cur: Path,
-                                      partitionCol: String): Unit =
-    if (fs.exists(root)) {
-      val marker = partitionCol + "="
-      fs.listStatus(root)
-        .map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith("_bak_") && n.contains(marker)
-        }
-        .foreach { bak =>
-          val partName = bak.getName.substring(bak.getName.indexOf(marker))
-          val dest = new Path(cur, partName)
-          if (fs.exists(dest)) fs.delete(bak, true)
-          else { fs.mkdirs(cur); fs.rename(bak, dest) }
-        }
+      // a false rename would leave no `data/`, and the merge would then
+      // commit the batch alone over the backed-up rows
+      baks.lastOption.foreach(b => if (!fs.rename(b.getPath, cur))
+        throw new java.io.IOException(s"restoring $cur from ${b.getPath} failed"))
     }
 
   /** Single-writer fencing for the rename-swap tables (VERDICT r04 #4):
@@ -289,40 +249,41 @@ object StreamingPipeline {
   /** Default staleness for [[withWriterLock]]: with the heartbeat
     * refreshing the token every staleMs/4, 10 minutes of silence means the
     * holder's JVM is gone (or partitioned long past any healthy pause) —
-    * not merely that its merge is slow. Override per table via the Spark
-    * conf `spark.graft.writerLock.staleMs` or the writers' `staleMs`
-    * parameter (ADVICE r5).
+    * not merely that its merge is slow. A deployment overrides it with the
+    * Spark conf `spark.graft.writerLock.staleMs` (ADVICE r5).
     */
   private[graft] val LockStaleMs = 10 * 60 * 1000L
 
-  /** Resolve the effective lock staleness: explicit argument, else the
-    * session conf `spark.graft.writerLock.staleMs`, else [[LockStaleMs]].
+  /** The effective lock staleness: the session conf
+    * `spark.graft.writerLock.staleMs`, else [[LockStaleMs]].
     */
-  private[graft] def resolveStaleMs(spark: SparkSession,
-                                    explicit: Option[Long]): Long =
-    explicit.orElse(
-      spark.conf.getOption("spark.graft.writerLock.staleMs")
-        .flatMap(v => scala.util.Try(v.toLong).toOption))
+  private[graft] def resolveStaleMs(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.writerLock.staleMs")
+      .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(LockStaleMs)
 
-  def upsertBatch(targetDir: String, keys: Seq[String],
-                  staleMs: Option[Long] = None)
+  /** ST5/ST7 per-batch sink: keyed upsert of the micro-batch into a parquet
+    * table at `targetDir/data`, with a staging-write + rename swap so readers
+    * never see a half-written table. Idempotent: re-running a batch after a
+    * failure rewrites the same cumulative values for the same keys — the
+    * exactly-once recipe (replayable source + idempotent keyed sink, ST7;
+    * the reference relies on DynamoDB put idempotency the same way,
+    * transform.py:379-387).
+    */
+  def upsertBatch(targetDir: String, keys: Seq[String])
                  (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = new Path(root, "data")
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
+    withWriterLock(fs, root, resolveStaleMs(spark)) {
       recoverBackup(fs, root, cur)
       val merged =
         if (fs.exists(cur)) Upsert.upsert(spark.read.parquet(cur.toString), batch, keys)
         else batch
       val tmp = new Path(root, s"_staging_$batchId")
       merged.write.mode("overwrite").parquet(tmp.toString)
-      val bak = new Path(root, s"_bak_$batchId")
-      if (fs.exists(cur)) fs.rename(cur, bak)
-      fs.rename(tmp, cur)
-      fs.delete(bak, true)
+      graft.state.FileState.swapIn(fs, tmp, cur, new Path(root, s"_bak_$batchId"))
     }
   }
 
@@ -338,14 +299,13 @@ object StreamingPipeline {
     * commutativity.
     */
   def upsertBatchSnapshot(targetDir: String, keys: Seq[String],
-                          staleMs: Option[Long] = None,
                           retainVersions: Int = 2,
                           mergeSchema: Boolean = false)
                          (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
+    withWriterLock(fs, root, resolveStaleMs(spark)) {
       val cur = graft.state.SnapshotStore.currentVersion(fs, root)
       if (!cur.exists(_ >= batchId)) {
         // mergeSchema = Delta autoMerge semantics (schema evolution on
@@ -375,18 +335,25 @@ object StreamingPipeline {
                    versionAsOf: Option[Long] = None): DataFrame =
     graft.state.SnapshotStore.read(spark, targetDir, "data", versionAsOf)
 
-  /** [[upsertPartitionedBatch]] with READER snapshot isolation — the
-    * partition-manifest commit ([[graft.state.ManifestStore]]): per-batch
-    * write cost stays O(touched partitions) (untouched partitions are
-    * inherited by manifest reference, never copied), readers resolve one
-    * atomic pointer, and a manifest referencing more than
+  /** Partition-aware keyed upsert with READER snapshot isolation — the
+    * partition-manifest commit ([[graft.state.ManifestStore]]): only the
+    * partitions the micro-batch touches are read, merged and written, so
+    * per-batch write cost is O(touched partitions) (untouched partitions
+    * are inherited by manifest reference, never copied); readers resolve
+    * one atomic pointer, and a manifest referencing more than
     * `maxManifestVersions` versions triggers a compacting full rewrite so
-    * reader fan-in stays bounded. Same single-writer lock, replay gate,
-    * and partition-stability precondition as the other partitioned sink.
+    * reader fan-in stays bounded. Same single-writer lock and replay gate
+    * as [[upsertBatchSnapshot]].
+    *
+    * Precondition: a key's partition value is stable across updates (the
+    * usual case — the partition column is derived from the key, e.g. the
+    * day of an event date). An update that MOVED a key to a different
+    * partition would insert it there while the old partition (untouched by
+    * the batch) still holds the stale row; use [[upsertBatchSnapshot]]
+    * when keys can migrate.
     */
   def upsertPartitionedBatchSnapshot(targetDir: String, keys: Seq[String],
                                      partitionCol: String,
-                                     staleMs: Option[Long] = None,
                                      maxManifestVersions: Int = 16,
                                      retentionMs: Long = 10 * 60 * 1000L,
                                      mergeSchema: Boolean = false)
@@ -394,7 +361,7 @@ object StreamingPipeline {
     val spark = batch.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
+    withWriterLock(fs, root, resolveStaleMs(spark)) {
       if (!graft.state.SnapshotStore.currentVersion(fs, root).exists(_ >= batchId))
         // evolution composes with the manifest layout for free: the new
         // version's schema file carries the union, and readManifested
@@ -415,203 +382,4 @@ object StreamingPipeline {
   def readPartitionedSnapshot(spark: SparkSession, targetDir: String,
                               versionAsOf: Option[Long] = None): DataFrame =
     graft.state.ManifestStore.read(spark, targetDir, versionAsOf)
-
-  /** Partition-aware variant of [[upsertBatch]]: only the partitions the
-    * micro-batch touches are read, merged, and rewritten (dynamic
-    * partition overwrite). [[upsertBatch]] rewrites the whole table per
-    * batch — fine for KPI-sized tables, O(table) at 100 TB; this one is
-    * O(touched partitions). The driver-side collect is of partition
-    * VALUES only (a bounded, tiny list — e.g. the days present in one
-    * batch), never data rows.
-    *
-    * Precondition: a key's partition value is stable across updates (the
-    * usual case — the partition column is derived from the key, e.g. the
-    * day of an event date). An update that MOVED a key to a different
-    * partition would insert it there while the old partition (untouched by
-    * the batch) still holds the stale row; use [[upsertBatch]] when keys
-    * can migrate.
-    */
-  def upsertPartitionedBatch(targetDir: String, keys: Seq[String],
-                             partitionCol: String,
-                             staleMs: Option[Long] = None)
-                            (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(root, "data")
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
-    recoverBackup(fs, root, cur)
-    recoverPartitionBackups(fs, root, cur, partitionCol)
-    val touched = batch.select(partitionCol).distinct().collect().map(_.get(0))
-    // isin(null) never matches — a null partition value must be selected
-    // with an explicit isNull arm or its stored rows would be dropped when
-    // the staged __HIVE_DEFAULT_PARTITION__ dir replaces the destination.
-    val (nullTouched, nonNull) = touched.partition(_ == null)
-    val pc = org.apache.spark.sql.functions.col(partitionCol)
-    val touchedPred =
-      if (nullTouched.isEmpty) pc.isin(nonNull: _*)
-      else if (nonNull.isEmpty) pc.isNull
-      else pc.isin(nonNull: _*) || pc.isNull
-    val merged =
-      if (fs.exists(cur)) {
-        val old = spark.read.parquet(cur.toString).filter(touchedPred)
-        Upsert.upsert(old, batch, keys)
-      } else batch
-    // Stage first, swap after: writing straight into `cur` would overwrite
-    // the path the merged plan is still reading (and a crash mid-commit
-    // would lose the touched partitions; code-review r3). The staged
-    // partition directory names carry Spark's own value escaping, so the
-    // swap lists them instead of reconstructing names from values.
-    val stage = new Path(root, s"_staging_$batchId")
-    // cluster by the partition column first — one file per touched dir
-    // instead of one per (task, dir), explicit partition count so AQE
-    // cannot serialize the dir creation into one task; see
-    // ManifestStore.stageTable (guide §6 small files)
-    merged.repartition(
-        spark.sessionState.conf.numShufflePartitions, pc)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(stage.toString)
-    if (!fs.exists(cur)) fs.mkdirs(cur)
-    fs.listStatus(stage)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      .foreach { p =>
-        val dest = new Path(cur, p.getPath.getName)
-        val bak = new Path(root, s"_bak_${batchId}_${p.getPath.getName}")
-        if (fs.exists(dest)) fs.rename(dest, bak)
-        fs.rename(p.getPath, dest)
-        fs.delete(bak, true)
-      }
-    fs.delete(stage, true)
-    }
-  }
-
-  /** Streaming category KPIs (ST5): the same aggregation as the batch
-    * flagship (Kpis.categoryKpis — sum/avg/ratio are streaming-safe; the
-    * exact countDistinct of dailyKpis is not, and stays batch-only), run as
-    * a cumulative streaming aggregation. Update output mode emits only the
-    * keys whose aggregates changed in the micro-batch; foreachBatch upserts
-    * them into the target table.
-    *
-    * Caller picks the trigger (Trigger.AvailableNow for drain-and-stop,
-    * ProcessingTime for continuous micro-batches — ST4) and calls .start().
-    */
-  def categoryKpiWriter(enrichedStream: DataFrame, targetDir: String,
-                        checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.categoryKpis(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatch(targetDir, Seq("category", "order_date")) _)
-
-  /** The 100 TB form of [[categoryKpiWriter]]: KPI table partitioned by
-    * order_date, so each micro-batch merges and swaps ONLY the dates it
-    * touched (a day's late events rewrite one partition, not the whole
-    * history). order_date is derived from the key, so the
-    * partition-stability precondition of [[upsertPartitionedBatch]] holds
-    * by construction.
-    */
-  def categoryKpiWriterPartitioned(enrichedStream: DataFrame, targetDir: String,
-                                   checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.categoryKpis(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertPartitionedBatch(targetDir,
-        Seq("category", "order_date"), "order_date") _)
-
-  /** [[categoryKpiWriter]] with reader snapshot isolation — the same
-    * cumulative aggregation committed through [[upsertBatchSnapshot]]'s
-    * versioned dirs + atomic pointer (read back via [[readSnapshot]]).
-    * Pick this over the rename-swap writer when the table has live
-    * readers during the stream.
-    */
-  def categoryKpiWriterSnapshot(enrichedStream: DataFrame, targetDir: String,
-                                checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.categoryKpis(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatchSnapshot(targetDir, Seq("category", "order_date")) _)
-
-  /** Streaming daily KPIs (VERDICT r04 #1 — the reference upserts BOTH KPI
-    * tables per trigger batch, transform.py:348-352 AND 359-365; the
-    * category writer alone left `order_kpis_daily` batch-only). Cumulative
-    * update-mode aggregation of [[graft.transform.Kpis.dailyKpisStreaming]]
-    * — the A2 family with mergeable HLL++ sketches standing in for the
-    * streaming-unsafe exact countDistinct — upserted per micro-batch
-    * through the same idempotent swap sink as the category table.
-    */
-  def dailyKpiWriter(enrichedStream: DataFrame, targetDir: String,
-                     checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.dailyKpisStreaming(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatch(targetDir, Seq("order_date")) _)
-
-  /** The 100 TB form of [[dailyKpiWriter]]: table partitioned by
-    * order_date (the key itself), so a micro-batch merges and swaps only
-    * the days it touched — per-batch sink I/O is O(days in the batch),
-    * not O(days of history). One row per partition is the degenerate-small
-    * end of partitioning; it is still the right trade here because the
-    * whole-table rewrite is what grows with history.
-    */
-  def dailyKpiWriterPartitioned(enrichedStream: DataFrame, targetDir: String,
-                                checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.dailyKpisStreaming(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertPartitionedBatch(targetDir,
-        Seq("order_date"), "order_date") _)
-
-  /** [[dailyKpiWriterPartitioned]] with reader snapshot isolation — the
-    * partition-manifest sink ([[upsertPartitionedBatchSnapshot]]): still
-    * O(touched days) per micro-batch, now with MVCC readers via
-    * [[readPartitionedSnapshot]].
-    */
-  def dailyKpiWriterPartitionedSnapshot(enrichedStream: DataFrame,
-                                        targetDir: String,
-                                        checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.dailyKpisStreaming(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertPartitionedBatchSnapshot(targetDir,
-        Seq("order_date"), "order_date") _)
-
-  /** EXACT streaming daily KPIs ([[graft.streaming.DailyKpis]]): the
-    * reference's exact integers (transform.py:395-399) kept under
-    * streaming by carrying per-day distinct-id sets in keyed state —
-    * choose this over [[dailyKpiWriter]] when per-day cardinality is
-    * state-store-affordable and the KV consumer needs exact counts.
-    */
-  def dailyKpiWriterExact(enrichedStream: DataFrame, targetDir: String,
-                          checkpointDir: String): DataStreamWriter[Row] =
-    DailyKpis.stream(enrichedStream).toDF()
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatch(targetDir, Seq("order_date")) _)
-
-  /** The full streaming KPI leg in one call — BOTH reference tables per
-    * trigger, the streaming mirror of [[graft.pipeline.Pipeline.sink]]
-    * (transform.py:348-352 AND 359-365 → two KV tables,
-    * transform.py:376-404). Starts two streaming queries over the same
-    * enriched stream (each with its own checkpoint under
-    * `checkpointRoot`); `exactDaily` picks [[dailyKpiWriterExact]]'s
-    * id-set state over [[dailyKpiWriter]]'s bounded HLL++ sketches.
-    * Caller configures the trigger on the returned writers before
-    * `.start()`, matching the single-writer pattern.
-    */
-  def kpiWriters(enrichedStream: DataFrame, categoryDir: String,
-                 dailyDir: String, checkpointRoot: String,
-                 exactDaily: Boolean = false): (DataStreamWriter[Row], DataStreamWriter[Row]) = {
-    val cat = categoryKpiWriter(enrichedStream, categoryDir,
-      s"$checkpointRoot/category")
-    val day =
-      if (exactDaily)
-        dailyKpiWriterExact(enrichedStream, dailyDir, s"$checkpointRoot/daily")
-      else dailyKpiWriter(enrichedStream, dailyDir, s"$checkpointRoot/daily")
-    (cat, day)
-  }
 }

@@ -59,6 +59,50 @@ class PipelineSpec extends SparkSpec {
     assert(seen.reverse == List(true, false)) // hook saw both terminal states
   }
 
+  test("sink upserts both KPI tables under <dir>/data and pushes them to the KV store") {
+    import graft.sources.{Tables, TestdataAdapter}
+    val dir = sys.props("user.home") + "/testdata/sf0.001" // see TESTDATA.md
+    val (o, i, p) = (TestdataAdapter.orders(spark, dir),
+      TestdataAdapter.orderItems(spark, dir), TestdataAdapter.products(spark, dir))
+    val res = Pipeline.run(spark, o, i, p,
+      Seq((Tables.orders(spark, dir), graft.EntryFixtures.cfgOrders)),
+      persistJoin = false)
+    assert(res.passed)
+    val joined = graft.transform.Kpis.enrich(o, i, p)
+    val (catWant, dayWant) =
+      (graft.transform.Kpis.categoryKpis(joined), graft.transform.Kpis.dailyKpis(joined))
+    def rows(df: org.apache.spark.sql.DataFrame, like: org.apache.spark.sql.DataFrame) =
+      df.select(like.columns.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toSeq).toSet
+    val (catDir, dayDir) = (Files.createTempDirectory("graft_sink_cat").toString,
+      Files.createTempDirectory("graft_sink_day").toString)
+    RecordingKv.clear()
+    Pipeline.sink(res, catDir, dayDir, Some(RecordingKv.writer))
+    def check(): Unit = {
+      assert(rows(spark.read.parquet(catDir + "/data"), catWant) == rows(catWant, catWant))
+      assert(rows(spark.read.parquet(dayDir + "/data"), dayWant) == rows(dayWant, dayWant))
+    }
+    check()
+    // the KV store received every row of both tables (KvSink's item shape)
+    def kvItems(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      df.columns.flatMap(c => Option(r.getAs[Any](c)).map(c -> _.toString)).toMap)
+    val want = kvItems(catWant) ++ kvItems(dayWant)
+    assert(RecordingKv.received.sortBy(_.toString) == want.sortBy(_.toString))
+    // a second sink into the same dirs is an idempotent keyed upsert
+    Pipeline.sink(res, catDir, dayDir)
+    check()
+
+    // a gate-failed result writes nothing anywhere
+    RecordingKv.clear()
+    val bad = Pipeline.run(spark, orders("BOGUS"), items, products,
+      Seq((orders("BOGUS"), cfg)), persistJoin = false)
+    val (badCat, badDay) = (Files.createTempDirectory("graft_sink_bc").toFile,
+      Files.createTempDirectory("graft_sink_bd").toFile)
+    Pipeline.sink(bad, badCat.toString, badDay.toString, Some(RecordingKv.writer))
+    assert(badCat.list().isEmpty && badDay.list().isEmpty)
+    assert(RecordingKv.received.isEmpty)
+  }
+
   test("curate: every stage of the funnel cuts what it should") {
     import org.apache.spark.sql.functions._
     val en = "the and is in it of to for on this table row data value key"
@@ -136,5 +180,20 @@ class PipelineSpec extends SparkSpec {
     assert(p.renameTo(bak))
     assert(FileState.load(spark, dir).count() == 4L)
     assert(p.exists() && !bak.exists())
+  }
+}
+
+/** A KV writer that records every item it is sent (local mode: executors
+  * share the JVM, so the static queue sees every partition's puts).
+  */
+object RecordingKv {
+  private val store = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
+  def clear(): Unit = store.clear()
+  def received: Seq[Map[String, String]] = {
+    import scala.jdk.CollectionConverters._
+    store.asScala.toSeq
+  }
+  val writer: graft.sinks.KvWriter = new graft.sinks.KvWriter {
+    def putBatch(batch: Seq[Map[String, String]]): Unit = batch.foreach(store.add)
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.SparkSpec
 import graft.transform.Kpis
 
@@ -28,48 +29,76 @@ class StreamingPipelineSpec extends SparkSpec {
     Files.move(part, Paths.get(dir, name + ".parquet"))
   }
 
-  private def enrichedRows(rows: Seq[(String, java.sql.Date, Double, Boolean)]): DataFrame =
-    rows.toDF("category", "order_date", "sale_price", "is_returned")
+  private val d1 = java.sql.Date.valueOf("2024-01-01")
+  private val d2 = java.sql.Date.valueOf("2024-01-02")
 
-  private def drain(inputDir: String, targetDir: String, checkpoint: String): Unit = {
-    val stream = spark.readStream
-      .schema(enrichedRows(Seq.empty).schema)
-      .parquet(inputDir)
-    val q = StreamingPipeline.categoryKpiWriter(stream, targetDir, checkpoint)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+  /** Enriched order-item rows: (order_id, user_id, product_id, category,
+    * sale_price, is_returned, order_date) — the KPI writers' input.
+    */
+  private def enrichedRows(
+      rows: Seq[(String, Long, Long, String, Double, Boolean, java.sql.Date)]): DataFrame =
+    rows.toDF("order_id", "user_id", "product_id", "category", "sale_price",
+      "is_returned", "order_date")
+
+  private type KpiWriter = (DataFrame, String, String) => DataStreamWriter[Row]
+  private val manifested: KpiWriter = JointKpis.writerManifested(_, _, _)
+  private val wholeTable: KpiWriter = JointKpis.writer(_, _, _)
+
+  /** Drain every file landed in `in` through `writer` (AvailableNow). */
+  private def drain(writer: KpiWriter, in: String, root: String, cp: String): Unit =
+    writer(spark.readStream.schema(enrichedRows(Seq.empty).schema).parquet(in),
+      root, cp).trigger(Trigger.AvailableNow()).start().awaitTermination()
 
   // (category, day) → (daily_revenue, avg_order_value, avg_return_rate)
   private def kpiMap(df: DataFrame): Map[(String, String), (Double, Double, Double)] =
-    df.collect().map(r => (r.getString(0), r.getDate(1).toString) ->
-      (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
+    df.select("category", "order_date", "daily_revenue", "avg_order_value",
+        "avg_return_rate")
+      .collect().map(r => (r.getString(0), r.get(1).toString) ->
+        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
 
-  private def readTarget(targetDir: String) =
-    kpiMap(spark.read.parquet(targetDir + "/data"))
+  private def dailyMap(df: DataFrame): Map[String, (Long, Double, Long, Double, Long)] =
+    df.select("order_date", "total_orders", "total_revenue",
+        "total_items_sold", "return_rate", "unique_customers")
+      .collect().map(r => r.get(0).toString ->
+        (r.getLong(1), r.getDouble(2), r.getLong(3), r.getDouble(4), r.getLong(5)))
+      .toMap
+
+  private def committed(root: String): Option[Long] = {
+    val p = new HPath(root)
+    graft.state.SnapshotStore.currentVersion(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** `order_date=` partition dirs the committed version of a manifested
+    * table wrote itself (inherited partitions live in older versions).
+    */
+  private def writtenDays(root: String, table: String): Set[String] =
+    Option(new java.io.File(graft.state.SnapshotStore.versionDir(
+        new HPath(root), committed(root).get).toUri.getPath, table).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .map(_.getName).filter(_.startsWith("order_date=")).toSet
 
   test("streaming KPIs equal the batch computation and re-draining is a no-op") {
-    val (in, out, cp) = (tmp("graft_in"), tmp("graft_out"), tmp("graft_cp"))
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-
+    val (in, root, cp) = (tmp("graft_in"), tmp("graft_out"), tmp("graft_cp"))
     landFile(enrichedRows(Seq(
-      ("toys", d1, 10.0, false), ("toys", d1, 30.0, true),
-      ("books", d1, 5.0, false))), in, "f1")
-    drain(in, out, cp)
+      ("o1", 1L, 10L, "toys", 10.0, false, d1), ("o1", 1L, 11L, "toys", 30.0, true, d1),
+      ("o2", 2L, 10L, "books", 5.0, false, d1))), in, "f1")
+    drain(manifested, in, root, cp)
 
-    val after1 = readTarget(out)
+    val after1 = kpiMap(JointKpis.categoryTableManifested(spark, root))
     assert(after1(("toys", "2024-01-01")) == (40.0, 20.0, 0.5))
     assert(after1(("books", "2024-01-01")) == (5.0, 5.0, 0.0))
 
-    // ST2: nothing new → second drain must not change the table
-    drain(in, out, cp)
-    assert(readTarget(out) == after1)
+    // ST2: nothing new → second drain commits nothing and changes nothing
+    val v1 = committed(root)
+    drain(manifested, in, root, cp)
+    assert(committed(root) == v1)
+    assert(kpiMap(JointKpis.categoryTableManifested(spark, root)) == after1)
 
     // ST5: a late file updates the cumulative aggregate for existing keys
-    landFile(enrichedRows(Seq(
-      ("toys", d1, 60.0, false))), in, "f2")
-    drain(in, out, cp)
-    val after2 = readTarget(out)
+    landFile(enrichedRows(Seq(("o3", 3L, 12L, "toys", 60.0, false, d1))), in, "f2")
+    drain(manifested, in, root, cp)
+    val after2 = kpiMap(JointKpis.categoryTableManifested(spark, root))
     assert(after2(("toys", "2024-01-01")) == (100.0, 100.0 / 3, 1.0 / 3))
     assert(after2(("books", "2024-01-01")) == (5.0, 5.0, 0.0)) // untouched key kept
 
@@ -78,33 +107,21 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("partitioned KPI writer equals the whole-table writer and the batch result") {
-    import org.apache.spark.sql.functions.col
-    val (in, out, cp) = (tmp("graft_pin"), tmp("graft_pout2"), tmp("graft_pcp"))
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-    val d2 = java.sql.Date.valueOf("2024-01-02")
+    val in = tmp("graft_pin")
+    val (rootP, cpP, rootW, cpW) =
+      (tmp("graft_pout"), tmp("graft_pcp"), tmp("graft_wout"), tmp("graft_wcp"))
     landFile(enrichedRows(Seq(
-      ("toys", d1, 10.0, false), ("toys", d2, 30.0, true),
-      ("books", d1, 5.0, false))), in, "f1")
-    def drainP(): Unit = {
-      val stream = spark.readStream
-        .schema(enrichedRows(Seq.empty).schema).parquet(in)
-      val q = StreamingPipeline.categoryKpiWriterPartitioned(stream, out, cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    drainP()
-    // second file touches ONLY d2 — the d1 partitions must survive the
-    // partial merge untouched
-    landFile(enrichedRows(Seq(("toys", d2, 60.0, false))), in, "f2")
-    drainP()
-    // order_date partition dirs come back typed — normalize via the shared map
-    val got = spark.read.parquet(out + "/data")
-      .select("category", "order_date", "daily_revenue", "avg_order_value", "avg_return_rate")
-      .collect().map(r => (r.getString(0), r.get(1).toString) ->
-        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    assert(got == kpiMap(Kpis.categoryKpis(spark.read.parquet(in))))
-    // the table really is laid out by date partition
-    assert(new java.io.File(out + "/data/order_date=2024-01-01").isDirectory)
+      ("o1", 1L, 10L, "toys", 10.0, false, d1), ("o2", 2L, 11L, "toys", 30.0, true, d2),
+      ("o3", 1L, 12L, "books", 5.0, false, d1))), in, "f1")
+    drain(manifested, in, rootP, cpP); drain(wholeTable, in, rootW, cpW)
+    // the second file touches ONLY d2 — the partitioned writer rewrites
+    // that day alone and inherits d1
+    landFile(enrichedRows(Seq(("o4", 3L, 10L, "toys", 60.0, false, d2))), in, "f2")
+    drain(manifested, in, rootP, cpP); drain(wholeTable, in, rootW, cpW)
+    assert(writtenDays(rootP, "category") == Set("order_date=2024-01-02"))
+    val batch = kpiMap(Kpis.categoryKpis(spark.read.parquet(in)))
+    assert(kpiMap(JointKpis.categoryTableManifested(spark, rootP)) == batch)
+    assert(kpiMap(JointKpis.categoryTable(spark, rootW)) == batch)
   }
 
   test("upsertBatch recovers the table from a backup left by a crashed swap") {
@@ -123,216 +140,128 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(table == Set((1L, 10.0), (2L, 21.0), (3L, 30.0)))
   }
 
-  test("partitioned upsert restores a partition stranded in a _bak_ dir by a crashed swap") {
-    val out = tmp("graft_precover")
-    val b1 = Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
+  test("a swap whose rename fails throws and keeps the committed table") {
+    // FileSystem.rename reports failure by returning false; the swap shared
+    // by upsertBatch and FileState.save must throw before it deletes the
+    // backup, which is then the only committed copy
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.flaky.impl", classOf[FlakyRenameFs].getName)
+    val b1 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
+    val b2 = Seq((2L, 21.0), (3L, 30.0)).toDF("k", "v")
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+    def throwsOnRename(n: Int)(body: => Unit): Unit = {
+      FlakyRenameFs.failOn(n)
+      try intercept[java.io.IOException](body) finally FlakyRenameFs.failOn(0)
+    }
+    // 1: moving the current table aside fails; 2: moving the staged one in
+    for (n <- Seq(1, 2)) {
+      val out = "flaky://" + tmp("graft_flaky")
+      StreamingPipeline.upsertBatch(out, Seq("k"))(b1, 0L)
+      throwsOnRename(n)(StreamingPipeline.upsertBatch(out, Seq("k"))(b2, 1L))
+      assert(rows(spark.read.parquet(out + "/data")) == rows(b1), s"rename $n")
+      // the next batch still merges against the kept table
+      StreamingPipeline.upsertBatch(out, Seq("k"))(b2, 2L)
+      assert(rows(spark.read.parquet(out + "/data")) ==
+        Set((1L, 10.0), (2L, 21.0), (3L, 30.0)))
 
-    // simulate a crash between rename(dest, bak) and rename(staged, dest):
-    // the 2024-01-02 partition survives only in _bak_1_day=2024-01-02
-    val part = new java.io.File(out + "/data/day=2024-01-02")
-    assert(part.renameTo(new java.io.File(out, "_bak_1_day=2024-01-02")))
-
-    // replayed batch touches only the OTHER partition — recovery must still
-    // put 2024-01-02 back before the merge reads the table
-    val b2 = Seq(("2024-01-01", 1L, 11.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-
-    val table = spark.read.parquet(out + "/data")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.get(2).toString)).toSet
-    assert(table == Set((1L, 11.0, "2024-01-01"), (2L, 20.0, "2024-01-02")))
-    assert(!new java.io.File(out, "_bak_1_day=2024-01-02").exists())
-  }
-
-  test("a completed-swap partition backup is dropped, not restored over new data") {
-    val out = tmp("graft_pdone")
-    val b1 = Seq(("2024-01-01", 1L, 10.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
-    // simulate a crash AFTER rename(staged, dest) but before delete(bak):
-    // dest holds the merged data, the backup holds the stale pre-merge rows
-    val stale = tmp("graft_stale")
-    Seq(("2024-01-01", 1L, -99.0)).toDF("day", "k", "v")
-      .write.parquet(stale + "/p")
-    val bak = new java.io.File(out, "_bak_0_day=2024-01-01")
-    assert(new java.io.File(stale, "p").renameTo(bak))
-
-    val b2 = Seq(("2024-01-01", 2L, 20.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-    val table = spark.read.parquet(out + "/data")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(table == Set((1L, 10.0), (2L, 20.0))) // stale -99 never resurfaces
-    assert(!bak.exists())
-  }
-
-  test("a partition backup is never promoted to be the whole table") {
-    val out = tmp("graft_pwhole")
-    val b1 = Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
-    // worst case: the data dir is gone AND a partition backup lingers —
-    // recoverBackup must not rename the partition backup to be `data`
-    val data = new java.io.File(out, "data")
-    val part = new java.io.File(data, "day=2024-01-02")
-    assert(part.renameTo(new java.io.File(out, "_bak_1_day=2024-01-02")))
-    assert(new java.io.File(data, "day=2024-01-01")
-      .renameTo(new java.io.File(out, "day=2024-01-01_detached")))
-    data.delete()
-
-    val b2 = Seq(("2024-01-01", 1L, 11.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-    // the partition backup came back as a PARTITION (under data/), not as
-    // the table root
-    val table = spark.read.parquet(out + "/data")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.get(2).toString)).toSet
-    assert(table == Set((1L, 11.0, "2024-01-01"), (2L, 20.0, "2024-01-02")))
+      val state = "flaky://" + tmp("graft_flaky_state") + "/state.parquet"
+      graft.state.FileState.save(Seq("f1", "f2").toDF("path"), state)
+      throwsOnRename(n)(graft.state.FileState.save(Seq("f3").toDF("path"), state))
+      assert(graft.state.FileState.load(spark, state).as[String].collect().toSet ==
+        Set("f1", "f2"), s"state rename $n")
+    }
+    // restoring a crashed swap's backup is a rename too: a false one must
+    // throw, not merge the next batch against an empty table
+    val out = "flaky://" + tmp("graft_flaky_restore")
+    StreamingPipeline.upsertBatch(out, Seq("k"))(b1, 0L)
+    val data = new java.io.File(new HPath(out).toUri.getPath, "data")
+    assert(data.renameTo(new java.io.File(data.getParent, "_bak_1")))
+    throwsOnRename(1)(StreamingPipeline.upsertBatch(out, Seq("k"))(b2, 2L))
+    StreamingPipeline.upsertBatch(out, Seq("k"))(b2, 2L)
+    assert(rows(spark.read.parquet(out + "/data")) ==
+      Set((1L, 10.0), (2L, 21.0), (3L, 30.0)))
   }
 
   test("partition-aware upsert rewrites only touched partitions") {
-    import org.apache.spark.sql.functions.col
     val out = tmp("graft_pout")
-    val b1 = Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
-
-    // note which files back the untouched partition
-    val d2dir = new java.io.File(out + "/data/day=2024-01-02")
-    val d2files = d2dir.listFiles().map(_.getName).toSet
-
+    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(out, Seq("k"), "day") _
+    sink(Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0))
+      .toDF("day", "k", "v"), 0L)
     // batch 2 touches only 2024-01-01: update k=1, insert k=3
-    val b2 = Seq(("2024-01-01", 1L, 11.0), ("2024-01-01", 3L, 30.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-
-    // partition-type inference reads day= back as DATE → compare as string
-    val table = spark.read.parquet(out + "/data")
+    sink(Seq(("2024-01-01", 1L, 11.0), ("2024-01-01", 3L, 30.0))
+      .toDF("day", "k", "v"), 1L)
+    val table = StreamingPipeline.readPartitionedSnapshot(spark, out)
+      .select("k", "v", "day")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.get(2).toString)).toSet
     assert(table == Set((1L, 11.0, "2024-01-01"), (3L, 30.0, "2024-01-01"),
       (2L, 20.0, "2024-01-02")))
-    // the 2024-01-02 partition's files were not rewritten
-    assert(d2dir.listFiles().map(_.getName).toSet == d2files)
+    // the 2024-01-02 partition was not rewritten: version 1 holds only the
+    // touched day, and the read resolves 2024-01-02 from version 0's files
+    val v1 = new java.io.File(graft.state.SnapshotStore.versionDir(
+      new HPath(out), 1L).toUri.getPath)
+    assert(v1.listFiles().map(_.getName).filter(_.startsWith("day=")).toSet ==
+      Set("day=2024-01-01"))
   }
 
   // ---- streaming daily KPIs (VERDICT r04 #1: the second KPI table) ----
 
-  private def enrichedOrderRows(
-      rows: Seq[(String, Long, Long, Double, Boolean, java.sql.Date)]): DataFrame =
-    rows.toDF("order_id", "user_id", "product_id", "sale_price",
-      "is_returned", "order_date")
-
-  private def dailyMap(df: DataFrame): Map[String, (Long, Double, Long, Double, Long)] =
-    df.select("order_date", "total_orders", "total_revenue",
-        "total_items_sold", "return_rate", "unique_customers")
-      .collect().map(r => r.get(0).toString ->
-        (r.getLong(1), r.getDouble(2), r.getLong(3), r.getDouble(4), r.getLong(5)))
-      .toMap
-
   test("streaming daily KPIs equal the exact batch computation cumulatively") {
-    val (in, out, cp) = (tmp("graft_din"), tmp("graft_dout"), tmp("graft_dcp"))
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-    val d2 = java.sql.Date.valueOf("2024-01-02")
-    def drainD(): Unit = {
-      val stream = spark.readStream
-        .schema(enrichedOrderRows(Seq.empty).schema).parquet(in)
-      val q = StreamingPipeline.dailyKpiWriter(stream, out, cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    landFile(enrichedOrderRows(Seq(
-      ("o1", 1L, 10L, 10.0, false, d1),
-      ("o1", 1L, 11L, 30.0, true, d1),   // same order, second item
-      ("o2", 2L, 10L, 5.0, false, d1),
-      ("o3", 1L, 12L, 7.0, false, d2))), in, "f1")
-    drainD()
-    // HLL++ is exact at these cardinalities (sparse mode), so the streamed
-    // sketch columns must EQUAL the batch countDistinct, not just approach it
-    assert(dailyMap(spark.read.parquet(out + "/data")) ==
+    val (in, root, cp) = (tmp("graft_din"), tmp("graft_dout"), tmp("graft_dcp"))
+    landFile(enrichedRows(Seq(
+      ("o1", 1L, 10L, "toys", 10.0, false, d1),
+      ("o1", 1L, 11L, "toys", 30.0, true, d1),   // same order, second item
+      ("o2", 2L, 10L, "toys", 5.0, false, d1),
+      ("o3", 1L, 12L, "toys", 7.0, false, d2))), in, "f1")
+    drain(wholeTable, in, root, cp)
+    assert(dailyMap(JointKpis.dailyTable(spark, root)) ==
       dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
 
     // ST5: a late file revises d1 (new order, NEW user) — cumulative
     // aggregates restate, untouched d2 row survives the upsert
-    landFile(enrichedOrderRows(Seq(
-      ("o4", 3L, 10L, 20.0, false, d1))), in, "f2")
-    drainD()
-    val after = dailyMap(spark.read.parquet(out + "/data"))
+    landFile(enrichedRows(Seq(("o4", 3L, 10L, "toys", 20.0, false, d1))), in, "f2")
+    drain(wholeTable, in, root, cp)
+    val after = dailyMap(JointKpis.dailyTable(spark, root))
     assert(after == dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
     assert(after("2024-01-01") == (3L, 65.0, 4L, 1.0 / 3, 3L))
     assert(after("2024-01-02") == (1L, 7.0, 1L, 0.0, 1L))
   }
 
   test("partitioned daily KPI writer lays the table out by day and matches batch") {
-    val (in, out, cp) = (tmp("graft_dpin"), tmp("graft_dpout"), tmp("graft_dpcp"))
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-    val d2 = java.sql.Date.valueOf("2024-01-02")
-    landFile(enrichedOrderRows(Seq(
-      ("o1", 1L, 10L, 10.0, false, d1),
-      ("o2", 2L, 11L, 30.0, true, d2))), in, "f1")
-    val stream = spark.readStream
-      .schema(enrichedOrderRows(Seq.empty).schema).parquet(in)
-    val q = StreamingPipeline.dailyKpiWriterPartitioned(stream, out, cp)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(dailyMap(spark.read.parquet(out + "/data")) ==
+    val (in, root, cp) = (tmp("graft_dpin"), tmp("graft_dpout"), tmp("graft_dpcp"))
+    landFile(enrichedRows(Seq(
+      ("o1", 1L, 10L, "toys", 10.0, false, d1),
+      ("o2", 2L, 11L, "books", 30.0, true, d2))), in, "f1")
+    drain(manifested, in, root, cp)
+    assert(dailyMap(JointKpis.dailyTableManifested(spark, root)) ==
       dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
-    assert(new java.io.File(out + "/data/order_date=2024-01-01").isDirectory)
+    assert(writtenDays(root, "daily") ==
+      Set("order_date=2024-01-01", "order_date=2024-01-02"))
   }
 
   test("EXACT streaming daily KPIs equal the batch computation bit-for-bit, cumulatively") {
-    val (in, out, cp) = (tmp("graft_ein"), tmp("graft_eout"), tmp("graft_ecp"))
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-    val d2 = java.sql.Date.valueOf("2024-01-02")
-    def drainE(): Unit = {
-      val stream = spark.readStream
-        .schema(enrichedOrderRows(Seq.empty).schema).parquet(in)
-      val q = StreamingPipeline.dailyKpiWriterExact(stream, out, cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    landFile(enrichedOrderRows(Seq(
-      ("o1", 1L, 10L, 10.0, false, d1),
-      ("o1", 1L, 11L, 30.0, true, d1),
-      ("o2", 2L, 10L, 5.0, false, d1),
-      ("o3", 1L, 12L, 7.0, false, d2))), in, "f1")
-    drainE()
-    assert(dailyMap(spark.read.parquet(out + "/data")) ==
+    val (in, root, cp) = (tmp("graft_ein"), tmp("graft_eout"), tmp("graft_ecp"))
+    landFile(enrichedRows(Seq(
+      ("o1", 1L, 10L, "toys", 10.0, false, d1),
+      ("o1", 1L, 11L, "toys", 30.0, true, d1),
+      ("o2", 2L, 10L, "toys", 5.0, false, d1),
+      ("o3", 1L, 12L, "toys", 7.0, false, d2))), in, "f1")
+    drain(manifested, in, root, cp)
+    assert(dailyMap(JointKpis.dailyTableManifested(spark, root)) ==
       dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
-    // late revision: o1 re-keyed user? no — new order+user on d1, and a
-    // duplicate ORDER id on d2 (distinct must not double count it)
-    landFile(enrichedOrderRows(Seq(
-      ("o4", 3L, 10L, 20.0, false, d1),
-      ("o3", 1L, 13L, 2.0, true, d2))), in, "f2")
-    drainE()
-    val after = dailyMap(spark.read.parquet(out + "/data"))
+    // late revision: a new order+user on d1, and a duplicate ORDER id on
+    // d2 (distinct must not double count it)
+    landFile(enrichedRows(Seq(
+      ("o4", 3L, 10L, "toys", 20.0, false, d1),
+      ("o3", 1L, 13L, "toys", 2.0, true, d2))), in, "f2")
+    drain(manifested, in, root, cp)
+    val after = dailyMap(JointKpis.dailyTableManifested(spark, root))
     assert(after == dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
     assert(after("2024-01-02") == (1L, 9.0, 2L, 1.0, 1L))
   }
 
-  test("kpiWriters drains BOTH reference KPI tables from one enriched stream") {
-    val (in, outC, outD, cp) =
-      (tmp("graft_kin"), tmp("graft_kcat"), tmp("graft_kday"), tmp("graft_kcp"))
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-    landFile(Seq(
-      ("o1", 1L, 10L, "toys", 10.0, false, d1),
-      ("o2", 2L, 11L, "books", 5.0, true, d1))
-      .toDF("order_id", "user_id", "product_id", "category",
-        "sale_price", "is_returned", "order_date"), in, "f1")
-    val schema = spark.read.parquet(in).schema
-    val stream = spark.readStream.schema(schema).parquet(in)
-    val (cat, day) = StreamingPipeline.kpiWriters(stream, outC, outD, cp,
-      exactDaily = true)
-    val qc = cat.trigger(Trigger.AvailableNow()).start()
-    val qd = day.trigger(Trigger.AvailableNow()).start()
-    qc.awaitTermination(); qd.awaitTermination()
-    val batch = spark.read.parquet(in)
-    assert(kpiMap(spark.read.parquet(outC + "/data")) ==
-      kpiMap(Kpis.categoryKpis(batch)))
-    assert(dailyMap(spark.read.parquet(outD + "/data")) ==
-      dailyMap(Kpis.dailyKpis(batch)))
-  }
-
   test("st_daily_kpis registered query: every comparison flag true on testdata") {
-    // the driver-oracle shape: real partitioned streaming writer vs the
-    // exact batch dailyKpis — exact columns equal, sketch columns within 5%
+    // the oracle shape: the joint writer's drained daily table vs
+    // the exact batch dailyKpis — every comparison flag true on every day
     val rows = graft.SparkEntry.queries("st_daily_kpis")(
       spark, "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
@@ -340,17 +269,11 @@ class StreamingPipelineSpec extends SparkSpec {
       "a streamed daily KPI diverged from the batch computation")
   }
 
-  // ---- writer-concurrency fencing (VERDICT r04 #4) ----
-
-  private def writeLock(out: String, pid: Long, host: String, ts: Long): java.io.File = {
-    new java.io.File(out).mkdirs()
-    val lock = new java.io.File(out, "_writer_lock")
-    java.nio.file.Files.writeString(lock.toPath, s"pid=$pid host=$host ts=$ts\n")
-    lock
-  }
-
   test("snapshot streaming writers drain to the same tables as the rename-swap ones") {
-    import org.apache.spark.sql.streaming.Trigger
+    // the three keyed sinks as foreachBatch writers over one stream: the
+    // rename-swap upsertBatch, the snapshot upsertBatchSnapshot and the
+    // partition-manifest upsertPartitionedBatchSnapshot must commit the
+    // same rows
     val dir = "/root/testdata/sf0.001"
     val enr = Kpis.enrich(
       graft.sources.TestdataAdapter.orders(spark, dir),
@@ -360,30 +283,37 @@ class StreamingPipelineSpec extends SparkSpec {
         "is_returned", "order_date")
     val stage = tmp("graft_snapw_in")
     enr.write.mode("overwrite").parquet(stage)
-    def drain(mk: (org.apache.spark.sql.DataFrame, String, String) =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-              out: String): Unit = {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(stage).schema).parquet(stage)
-      val q = mk(stream, out, tmp("graft_snapw_cp"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val catOut = tmp("graft_snapw_cat")
-    drain(StreamingPipeline.categoryKpiWriterSnapshot, catOut)
-    def catRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("category", "order_date", "daily_revenue").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2))).toSet
-    assert(catRows(StreamingPipeline.readSnapshot(spark, catOut))
-      == catRows(Kpis.categoryKpis(enr)))
-    val dayOut = tmp("graft_snapw_day")
-    drain(StreamingPipeline.dailyKpiWriterPartitionedSnapshot, dayOut)
-    // sketch-based daily stream: compare the exact columns
-    def dayRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("order_date", "total_revenue", "total_items_sold").collect()
-        .map(r => (r.getDate(0).toString, r.getDouble(1), r.getLong(2))).toSet
-    assert(dayRows(StreamingPipeline.readPartitionedSnapshot(spark, dayOut))
-      == dayRows(Kpis.dailyKpis(enr)))
+    def drainTo(agg: DataFrame => DataFrame, sink: (DataFrame, Long) => Unit): Unit =
+      agg(spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage))
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", tmp("graft_snapw_cp"))
+        .foreachBatch(sink)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val catKeys = Seq("category", "order_date")
+    val (catSwap, catSnap) = (tmp("graft_snapw_cat"), tmp("graft_snapw_cats"))
+    drainTo(Kpis.categoryKpis, StreamingPipeline.upsertBatch(catSwap, catKeys))
+    drainTo(Kpis.categoryKpis, StreamingPipeline.upsertBatchSnapshot(catSnap, catKeys))
+    val catBatch = kpiMap(Kpis.categoryKpis(enr))
+    assert(kpiMap(spark.read.parquet(catSwap + "/data")) == catBatch)
+    assert(kpiMap(StreamingPipeline.readSnapshot(spark, catSnap)) == catBatch)
+
+    val daily = (df: DataFrame) => DailyKpis.stream(df).toDF()
+    val (daySwap, dayPart) = (tmp("graft_snapw_day"), tmp("graft_snapw_dayp"))
+    drainTo(daily, StreamingPipeline.upsertBatch(daySwap, Seq("order_date")))
+    drainTo(daily, StreamingPipeline.upsertPartitionedBatchSnapshot(
+      dayPart, Seq("order_date"), "order_date"))
+    val dayBatch = dailyMap(Kpis.dailyKpis(enr))
+    assert(dailyMap(spark.read.parquet(daySwap + "/data")) == dayBatch)
+    assert(dailyMap(StreamingPipeline.readPartitionedSnapshot(spark, dayPart)) == dayBatch)
+  }
+
+  // ---- writer-concurrency fencing (VERDICT r04 #4) ----
+
+  private def writeLock(out: String, pid: Long, host: String, ts: Long): java.io.File = {
+    new java.io.File(out).mkdirs()
+    val lock = new java.io.File(out, "_writer_lock")
+    java.nio.file.Files.writeString(lock.toPath, s"pid=$pid host=$host ts=$ts\n")
+    lock
   }
 
   test("a second concurrent writer fails fast instead of interleaving swaps") {
@@ -397,10 +327,10 @@ class StreamingPipelineSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("another writer"))
     assert(!new java.io.File(out, "data").exists()) // loser wrote nothing
-    // same contract on the partitioned path
+    // same contract on the partition-manifest path
     val bp = Seq(("2024-01-01", 1L, 10.0)).toDF("day", "k", "v")
     intercept[IllegalStateException] {
-      StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(bp, 0L)
+      StreamingPipeline.upsertPartitionedBatchSnapshot(out, Seq("k"), "day")(bp, 0L)
     }
     lock.delete()
     StreamingPipeline.upsertBatch(out, Seq("k"))(b, 0L) // released → proceeds
@@ -516,14 +446,11 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(!lock.exists(), "heartbeat holder failed to release its own lock")
   }
 
-  test("lock staleness is configurable via conf and writer parameter (ADVICE r5)") {
-    assert(StreamingPipeline.resolveStaleMs(spark, Some(1234L)) == 1234L)
-    assert(StreamingPipeline.resolveStaleMs(spark, None) ==
-      StreamingPipeline.LockStaleMs)
+  test("lock staleness is configurable via conf (ADVICE r5)") {
+    assert(StreamingPipeline.resolveStaleMs(spark) == StreamingPipeline.LockStaleMs)
     spark.conf.set("spark.graft.writerLock.staleMs", "5000")
     try {
-      assert(StreamingPipeline.resolveStaleMs(spark, None) == 5000L)
-      assert(StreamingPipeline.resolveStaleMs(spark, Some(7L)) == 7L)
+      assert(StreamingPipeline.resolveStaleMs(spark) == 5000L)
       // end-to-end: a foreign-host lock older than the configured bound is
       // broken where the 10-minute default would have blocked
       val out = tmp("graft_lockcfg")
@@ -533,4 +460,27 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(spark.read.parquet(out + "/data").count() == 1)
     } finally spark.conf.unset("spark.graft.writerLock.staleMs")
   }
+}
+
+/** A local filesystem under the `flaky:` scheme whose `rename` returns
+  * false on the Nth swap rename after [[FlakyRenameFs.failOn]]`(n)` — the
+  * failure `FileSystem.rename` reports without throwing. Renames inside a
+  * Spark job's `_temporary` output dirs are not counted.
+  */
+class FlakyRenameFs extends org.apache.hadoop.fs.FilterFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = java.net.URI.create("flaky:///")
+      override def getScheme: String = "flaky"
+    }) {
+  override def rename(src: HPath, dst: HPath): Boolean =
+    if (src.toString.contains("_temporary")) super.rename(src, dst)
+    else if (FlakyRenameFs.calls.incrementAndGet() == FlakyRenameFs.failAt) false
+    else super.rename(src, dst)
+}
+
+object FlakyRenameFs {
+  @volatile private var failAt = 0
+  private val calls = new java.util.concurrent.atomic.AtomicInteger()
+  /** Fail the `n`th swap rename from now on; 0 disarms. */
+  def failOn(n: Int): Unit = { calls.set(0); failAt = n }
 }
